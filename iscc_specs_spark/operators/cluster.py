@@ -5,8 +5,9 @@ template-farm star stay as min-aggregations + joins, never materialized as
 one row).
 
 Each round is two shuffles; lineage is cut with localCheckpoint every round
-(swap for ``checkpoint(dir)`` on a real cluster).  Convergence = stable
-(count, xor-of-hashes) edge-set fingerprint — one cheap aggregate per round.
+(swap for ``checkpoint(dir)`` on a real cluster).  Convergence = the edge
+set is a directed star forest (see ``_converged``) — one aggregation pass
+over the checkpointed edges per round.
 """
 
 from __future__ import annotations

@@ -35,7 +35,7 @@ machinery here is unchanged by that swap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_BANDS = 16
@@ -76,15 +76,14 @@ def exact_pairs(codes: DataFrame, reps: DataFrame) -> DataFrame:
     )
 
 
-def rep_codes(codes: DataFrame, reps: DataFrame | None = None) -> DataFrame:
+def rep_codes(codes: DataFrame) -> DataFrame:
     """Slim per-representative code table that feeds LSH (exact-dup groups
     collapse to their representative — degenerate-signature skew never
     reaches the band join).
 
     One ``min_by`` aggregation on tophash — shares its exchange with
     :func:`exact_rep_table` (same grouping key → ReusedExchange) instead of
-    the former semi-join (which cost two extra shuffles). ``reps`` is
-    accepted for API compatibility and unused."""
+    the former semi-join (which cost two extra shuffles)."""
     picked = codes.groupBy("tophash").agg(
         F.min_by(
             F.struct("url", "cid_body", "simhash", "minhash"), F.col("url")
@@ -95,14 +94,10 @@ def rep_codes(codes: DataFrame, reps: DataFrame | None = None) -> DataFrame:
     )
 
 
-def minhash_bands(
-    codes: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """(url, *keep, band_id, band_hash) — native explode of xxhash64 band
-    keys; ``keep`` columns pass through unchanged (e.g. the streaming band
-    index preserves ``ingest_batch`` for partition attribution)."""
-    structs = [
+def _minhash_structs(bands: int, rows: int) -> list:
+    """One (band_id, band_hash) struct per MinHash band: xxhash64 over the
+    band id and its ``rows`` signature values."""
+    return [
         F.struct(
             F.lit(i).alias("band_id"),
             F.xxhash64(
@@ -111,6 +106,27 @@ def minhash_bands(
         )
         for i in range(bands)
     ]
+
+
+def _simhash_structs(subkeys: int) -> list:
+    """One (band_id, band_hash) struct per SimHash sub-key; band_id offset
+    by 1000 to keep the key space disjoint from minhash bands."""
+    width = 64 // subkeys
+    mask = (1 << width) - 1
+    return [
+        F.struct(
+            F.lit(1000 + i).alias("band_id"),
+            F.shiftrightunsigned(F.col("simhash"), i * width)
+            .bitwiseAND(F.lit(mask))
+            .alias("band_hash"),
+        )
+        for i in range(subkeys)
+    ]
+
+
+def _explode_bands(
+    codes: DataFrame, structs: list, keep: tuple[str, ...]
+) -> DataFrame:
     return codes.select(
         "url", *keep, F.explode(F.array(*structs)).alias("b")
     ).select(
@@ -120,53 +136,21 @@ def minhash_bands(
     )
 
 
+def minhash_bands(
+    codes: DataFrame, bands: int = DEFAULT_BANDS, rows: int = DEFAULT_ROWS,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(url, *keep, band_id, band_hash) — native explode of xxhash64 band
+    keys; ``keep`` columns pass through unchanged (e.g. the streaming band
+    index preserves ``ingest_batch`` for partition attribution)."""
+    return _explode_bands(codes, _minhash_structs(bands, rows), keep)
+
+
 def simhash_bands(
     codes: DataFrame, subkeys: int = 4, keep: tuple[str, ...] = ()
 ) -> DataFrame:
-    """(url, *keep, band_id, band_hash) from 16-bit SimHash sub-keys;
-    band_id offset by 1000 to keep the key space disjoint from minhash
-    bands."""
-    width = 64 // subkeys
-    mask = (1 << width) - 1
-    structs = [
-        F.struct(
-            F.lit(1000 + i).alias("band_id"),
-            (F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask))).alias(
-                "band_hash"
-            ),
-        )
-        for i in range(subkeys)
-    ]
-    return codes.select("url", *keep, F.explode(F.array(*structs)).alias("b")).select(
-        "url", *keep,
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_hash").alias("band_hash"),
-    )
-
-
-def _band_structs(bands: int, rows: int, subkeys: int = 4) -> list:
-    """Band-key struct expressions for one combined explode (minhash LSH
-    bands + simhash sub-key bands in a single projection pass)."""
-    out = [
-        F.struct(
-            F.lit(i).alias("band_id"),
-            F.xxhash64(
-                F.lit(i), *[F.col("minhash")[j] for j in range(i * rows, (i + 1) * rows)]
-            ).alias("band_hash"),
-        )
-        for i in range(bands)
-    ]
-    width = 64 // subkeys
-    mask = (1 << width) - 1
-    out += [
-        F.struct(
-            F.lit(1000 + i).alias("band_id"),
-            (F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask)))
-            .cast("long").alias("band_hash"),
-        )
-        for i in range(subkeys)
-    ]
-    return out
+    """(url, *keep, band_id, band_hash) from 16-bit SimHash sub-keys."""
+    return _explode_bands(codes, _simhash_structs(subkeys), keep)
 
 
 BAND_PFX_BUCKETS = 64
@@ -174,10 +158,9 @@ BAND_PFX_BUCKETS = 64
 
 def band_pfx(buckets: int = BAND_PFX_BUCKETS):
     """Partition-prefix expression over a (band_id, band_hash) row — the
-    shared at-rest bucketing key for band tables (batch stage table in
-    plans/dedup.py, streaming maintained index in streaming/ingest.py):
-    a reader probing a known key set prunes to pmod-matching partition
-    directories instead of scanning the table."""
+    at-rest bucketing key of the streaming band index
+    (streaming/ingest.py): a reader probing a known key set prunes to
+    pmod-matching partition directories instead of scanning the table."""
     return F.pmod(
         F.xxhash64(F.col("band_id"), F.col("band_hash")), F.lit(buckets)
     ).cast("int")
@@ -188,15 +171,17 @@ def band_rows_table(
 ) -> DataFrame:
     """(m struct(url,cid_body,simhash,tophash), band_id, band_hash) — the
     banded representative table with the verification payload riding along
-    (see verified_bucket_pairs). Exposed so plans/dedup.py can write it as
-    a band_pfx-partitioned stage table and feed the SAME at-rest rows to
-    the metrics pass and the pair generator."""
+    (see verified_bucket_pairs). Minhash bands and simhash sub-keys come
+    out of one explode, with the same band keys as :func:`minhash_bands`
+    and :func:`simhash_bands`. Exposed so plans/dedup.py can write it as a
+    stage table and feed the SAME at-rest rows to the metrics pass and the
+    pair generator."""
     payload = F.struct(
         F.col("url"), F.col("cid_body"), F.col("simhash"), F.col("tophash")
     )
+    structs = _minhash_structs(bands, rows) + _simhash_structs(4)
     return slim.select(
-        payload.alias("m"),
-        F.explode(F.array(*_band_structs(bands, rows))).alias("b"),
+        payload.alias("m"), F.explode(F.array(*structs)).alias("b")
     ).select(
         "m",
         F.col("b.band_id").alias("band_id"),
@@ -232,9 +217,9 @@ def verified_bucket_pairs(
     exact_dup) for capped buckets plus unverified hub edges flagged
     verified=false.
 
-    ``band_rows``: pass a precomputed band table (e.g. the band_pfx-
-    partitioned stage table plans/dedup.py writes) to skip the in-plan
-    banding; must have band_rows_table's (m, band_id, band_hash) shape.
+    ``band_rows``: pass a precomputed band table (e.g. the ``bands``
+    stage table plans/dedup.py writes) to skip the in-plan banding; must
+    have band_rows_table's (m, band_id, band_hash) shape.
     """
     if band_rows is None:
         band_rows = band_rows_table(slim, bands, rows)
@@ -364,6 +349,15 @@ def hamming64(a, b):
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _jaccard_est():
+    """Share of equal positions between the ``mh_a`` and ``mh_b`` MinHash
+    signatures (64 values each)."""
+    return F.expr(
+        "aggregate(zip_with(mh_a, mh_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
+        "0, (acc, v) -> acc + v)"
+    ) / F.lit(64.0)
+
+
 def verify_pairs(
     cand: DataFrame,
     codes_slim: DataFrame,
@@ -392,17 +386,13 @@ def verify_pairs(
         F.col("tophash").alias("top_b"),
     )
     joined = cand.join(a, "url_a").join(b, "url_b")
-    eq_minhash = F.expr(
-        "aggregate(zip_with(mh_a, mh_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
-        "0, (acc, v) -> acc + v)"
-    )
     out = joined.select(
         "url_a",
         "url_b",
         "src",
         hamming64(F.col("cid_a"), F.col("cid_b")).alias("cid_hamming"),
         hamming64(F.col("sim_a"), F.col("sim_b")).alias("simhash_hamming"),
-        (eq_minhash / F.lit(64.0)).alias("jaccard_est"),
+        _jaccard_est().alias("jaccard_est"),
         (F.col("top_a") == F.col("top_b")).alias("exact_dup"),
     )
     return out.where(
@@ -418,14 +408,10 @@ def attach_jaccard(pairs: DataFrame, slim: DataFrame) -> DataFrame:
     a bounded fraction of what the old join-everything verifier moved."""
     a = slim.select(F.col("url").alias("url_a"), F.col("minhash").alias("mh_a"))
     b = slim.select(F.col("url").alias("url_b"), F.col("minhash").alias("mh_b"))
-    eq_minhash = F.expr(
-        "aggregate(zip_with(mh_a, mh_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
-        "0, (acc, v) -> acc + v)"
-    )
     return (
         pairs.join(a, "url_a")
         .join(b, "url_b")
-        .withColumn("jaccard_est", eq_minhash / F.lit(64.0))
+        .withColumn("jaccard_est", _jaccard_est())
         .drop("mh_a", "mh_b")
     )
 

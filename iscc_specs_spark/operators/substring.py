@@ -9,10 +9,12 @@ suffix array:
      ``xxhash64(window) % sample == 0``): a deterministic ~1/sample subset
      whose selection is content-defined, so two documents sharing a long
      run select the *same* anchors inside it regardless of offset. Native
-     Spark (transform/sequence/substring/xxhash64) — no UDF, no shuffle.
-  2. **Inverted index** — shuffle on anchor hash; buckets over a df-cap are
-     dropped with metrics (boilerplate guard, same skew policy as LSH
-     bucket capping in operators/lsh.py).
+     Spark (explode of window positions, then substring + xxhash64 as
+     codegen'd projections) — no UDF, no shuffle.
+  2. **Inverted index** — shuffle on anchor hash; anchors present in more
+     than a df-cap of documents are dropped (boilerplate guard, same skew
+     policy as LSH bucket capping in operators/lsh.py). The dropped anchors
+     are not counted.
   3. **Pair + span merge** — documents sharing ≥ ``min_anchors`` anchors
      become candidate pairs; consecutive shared anchors whose position
      deltas agree merge into match spans; spans ≥ ``min_len`` are reported.

@@ -73,7 +73,6 @@ class CurateConfig:
     domain_min_quality: float | None = None
     min_quality: float = 0.35
     dedup: DedupConfig = field(default_factory=DedupConfig)
-    lineage: bool = True
     # ⑥ optional SemDeDup stage over the canonical corpus: hashing-trick
     # text embeddings → ivf_build quantizer → within-list cosine groups →
     # keep-the-novel representative (operators/semantic.py). hash_fn 'md5'
@@ -144,7 +143,6 @@ def run_curation(
                 "dsir": dsir_active,
             }
         ),
-        lineage=cfg.lineage,
     )
 
     # ⓪a optional canonical-URL crawl dedup — the cheapest duplicate class
@@ -389,11 +387,9 @@ def run_curation(
 
     # ⑦ optional stratified mixing sample — the last stage: fractions are
     # the data-budget knob and must apply to the already-clean corpus
-    n_sem = None
     if cfg.sample_fractions is not None:
         from iscc_specs_spark.operators.sampling import stratified_sample
 
-        n_sem = final.count()
         if store.has("corpus_sampled"):
             final = store.read(spark, "corpus_sampled")
         else:
@@ -413,11 +409,9 @@ def run_curation(
     # target), keep the dsir_k highest Gumbel-perturbed-weight docs. Model
     # and selection are staged (the model is the audit artifact: which
     # feature buckets pulled docs in); the corpus filter is a semi-join.
-    n_mix = None
     if dsir_active:
         from iscc_specs_spark.operators import dsir as _dsir
 
-        n_mix = final.count()
         if store.has("corpus_dsir"):
             final = store.read(spark, "corpus_dsir")
         else:
@@ -448,6 +442,11 @@ def run_curation(
                 "corpus_dsir",
             )
 
+    # every funnel term that is a stage's size comes from that stage's
+    # manifest: no count action
+    def stage_rows(stage: str) -> int:
+        return store.manifest(stage)["rows"]
+
     n_in = pages.count()
     n_crawl = crawl.count() if cfg.url_dedup else n_in
     n_dom = (
@@ -455,7 +454,7 @@ def run_curation(
     )
     n_kept = kept.count()
     n_clean = clean.count() if eval_pages is not None else n_kept
-    n_corpus = corpus.count()
+    n_corpus = stage_rows("corpus_cut" if cfg.substring_cut else "corpus")
     sub_rewritten = sub_chars_cut = 0
     if cfg.substring_cut:
         row = corpus.agg(
@@ -463,29 +462,15 @@ def run_curation(
             F.sum("chars_cut").alias("c"),
         ).collect()[0]
         sub_rewritten, sub_chars_cut = int(row["d"] or 0), int(row["c"] or 0)
-    # n_sem: docs after the semantic stage; n_mix: docs after the mixing
-    # sample (== before DSIR). Each is counted at the next stage's entry
-    # when that stage is active, else derived without an extra action.
-    if n_mix is not None:
-        # DSIR was active: n_mix was counted at its entry; when sampling
-        # was off nothing dropped between the semantic stage and DSIR, so
-        # the same count serves as n_sem
-        n_sem = n_sem if n_sem is not None else n_mix
-        n_mix_final = n_mix
-    else:
-        n_sem = n_sem if n_sem is not None else (
-            final.count() if cfg.semantic else n_corpus
-        )
-        n_mix_final = (
-            final.count() if cfg.sample_fractions is not None else n_sem
-        )
-    n_out = (
-        final.count()
-        # `is not None`, matching the stage guard: an EMPTY fractions dict
-        # still runs the sampler (everything at sample_default)
-        if (cfg.semantic or cfg.sample_fractions is not None or dsir_active)
-        else n_corpus
+    n_sem = stage_rows("corpus_sem") if cfg.semantic else n_corpus
+    # `is not None`, matching the stage guard: an EMPTY fractions dict
+    # still runs the sampler (everything at sample_default)
+    n_mix = (
+        stage_rows("corpus_sampled")
+        if cfg.sample_fractions is not None
+        else n_sem
     )
+    n_out = stage_rows("corpus_dsir") if dsir_active else n_mix
     tokens_out = final.agg(F.sum("n_tokens")).collect()[0][0] or 0
     metrics = {
         "docs_in": n_in,
@@ -497,8 +482,8 @@ def run_curation(
         "docs_rewritten_substring": sub_rewritten,
         "chars_cut_substring": sub_chars_cut,
         "docs_dropped_semantic": n_corpus - n_sem,
-        "docs_dropped_sampling": n_sem - n_mix_final,
-        "docs_dropped_dsir": n_mix_final - n_out,
+        "docs_dropped_sampling": n_sem - n_mix,
+        "docs_dropped_dsir": n_mix - n_out,
         "docs_out": n_out,
         "tokens_out": int(tokens_out),
     }

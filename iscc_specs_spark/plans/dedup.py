@@ -11,7 +11,7 @@ stage (kill-after-stage produces byte-identical final clusters — T4).
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,16 +30,6 @@ class DedupConfig:
     bucket_cap: int = 64
     cid_max: int = lsh.CID_T_MAX_HAMMING
     sim_max: int = lsh.SIMHASH_MAX_HAMMING
-    lineage: bool = True
-    # >0: write the url-keyed stage tables (codes, clusters, canonical)
-    # hash-BUCKETED by url into this many buckets (sources/storage.py
-    # write_bucketed). Every url-equi-join among resumed stages — the
-    # canonical pick's codes ⋈ clusters, any downstream key probe — then
-    # runs exchange-free off the bucketed scans (plan-proved in
-    # tests/test_storage_bucketed.py / test_pipeline.py). Default off:
-    # at benchmark sizes the fixed per-bucket file overhead outweighs the
-    # saved shuffle; at 100 TB bucket counts are sized to the cluster.
-    bucket_by_url: int = 0
 
 
 def lsh_metrics(band_table: DataFrame, bucket_cap: int) -> dict:
@@ -58,22 +48,6 @@ def lsh_metrics(band_table: DataFrame, bucket_cap: int) -> dict:
         .collect()[0]
     )
     return {k: int(row[k] or 0) for k in row.asDict()}
-
-
-def probe_band_stage(
-    spark: SparkSession, store: StageStore, pfx: list[int] | None = None
-) -> DataFrame:
-    """Read a run's at-rest banded stage table, statically pruned to the
-    given ``band_pfx`` buckets — the batch mirror of the streaming index
-    probe (streaming/ingest.read_band_index). An incremental re-check of a
-    key set against a finished snapshot computes the keys' prefixes with
-    :func:`lsh.band_pfx` and passes them here; Spark pushes the IN-list
-    into PartitionFilters, so probe I/O is bounded by prefix coverage, not
-    snapshot size (plan-gated in tests/test_pipeline.py)."""
-    df = store.read(spark, "bands")
-    if pfx is not None:
-        df = df.where(F.col("band_pfx").isin([int(p) for p in pfx]))
-    return df
 
 
 def canonical_pick(codes: DataFrame, clusters: DataFrame) -> DataFrame:
@@ -108,31 +82,16 @@ def run_dedup(
     pages: DataFrame,
     out_dir: str,
     cfg: DedupConfig | None = None,
-    collect_lsh_metrics: bool = True,
 ) -> dict:
     """Returns {"clusters": DataFrame, "store": StageStore, ...stage dfs}."""
     cfg = cfg or DedupConfig()
-    store = StageStore(out_dir, config_hash(asdict(cfg)), lineage=cfg.lineage)
-
-    def _write_url_stage(df, name):
-        # url-keyed stages optionally go down bucketed so their mutual
-        # equi-joins never shuffle on resume (DedupConfig.bucket_by_url)
-        if cfg.bucket_by_url:
-            return store.write_bucketed(
-                df, name, key="url", buckets=cfg.bucket_by_url
-            )
-        return store.write(df, name)
-
-    def _read_url_stage(name):
-        if cfg.bucket_by_url:
-            return store.read_bucketed(spark, name)
-        return store.read(spark, name)
+    store = StageStore(out_dir, config_hash(asdict(cfg)))
 
     # ① codes
     if store.has("codes"):
-        codes = _read_url_stage("codes")
+        codes = store.read(spark, "codes")
     else:
-        codes = _write_url_stage(compute_codes(pages, cfg.tracks), "codes")
+        codes = store.write(compute_codes(pages, cfg.tracks), "codes")
 
     # ② dup pairs
     if store.has("dup_pairs"):
@@ -146,26 +105,15 @@ def run_dedup(
         # exact-dup pairing (previously two independent full-corpus
         # aggregations)
         slim = lsh.rep_codes(codes).localCheckpoint(eager=True)
-        # the banded representative table is a WRITTEN stage, at rest
-        # partitioned by band_pfx (pmod of the band key): one banding pass
-        # feeds both the metrics aggregation and the pair generator, the
-        # manifest records the bucketed layout, and a key-set probe of the
-        # stage (e.g. an incremental re-check against this snapshot) reads
-        # only matching partition directories — same contract as the
-        # streaming band index (streaming/ingest.py)
+        # the banded representative table is a WRITTEN stage: one banding
+        # pass feeds both the metrics aggregation and the pair generator
         if store.has("bands"):
             band_rows = store.read(spark, "bands")
         else:
             band_rows = store.write(
-                lsh.band_rows_table(slim, cfg.bands, cfg.rows).withColumn(
-                    "band_pfx", lsh.band_pfx()
-                ),
-                "bands",
-                partition_by=["band_pfx"],
+                lsh.band_rows_table(slim, cfg.bands, cfg.rows), "bands"
             )
-        metrics = (
-            lsh_metrics(band_rows, cfg.bucket_cap) if collect_lsh_metrics else {}
-        )
+        metrics = lsh_metrics(band_rows, cfg.bucket_cap)
         pairs = store.write(
             lsh.dup_pairs(
                 codes, cfg.bands, cfg.rows, cfg.bucket_cap, cfg.cid_max,
@@ -180,20 +128,18 @@ def run_dedup(
 
     # ③ clusters (+ singleton attach)
     if store.has("clusters"):
-        clusters = _read_url_stage("clusters")
+        clusters = store.read(spark, "clusters")
     else:
-        clusters = _write_url_stage(
+        clusters = store.write(
             assign_clusters(codes.select("url"), pairs), "clusters"
         )
 
     # ④ canonical representative per cluster: keep oldest (warc_ts, url)
-    # (skew-free min_by aggregation — see canonical_pick; with
-    # bucket_by_url the members join reads two co-bucketed scans and
-    # starts shuffle-free)
+    # (skew-free min_by aggregation — see canonical_pick)
     if store.has("canonical"):
-        canonical = _read_url_stage("canonical")
+        canonical = store.read(spark, "canonical")
     else:
-        canonical = _write_url_stage(canonical_pick(codes, clusters), "canonical")
+        canonical = store.write(canonical_pick(codes, clusters), "canonical")
 
     return {
         "codes": codes,

@@ -7,11 +7,15 @@ Python workers so pandas UDFs can import the kernel.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -25,6 +29,9 @@ def get_spark(
     os.environ["PYTHONPATH"] = (
         REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
     )
+    jvm_opts = os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:-DontCompileHugeMethods")
+    # JVM options only reach a JVM this call launches
+    attached = SparkContext._gateway is not None
     builder = (
         SparkSession.builder.appName(app)
         .master(f"local[{cores}]")
@@ -43,25 +50,33 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"),
         )
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # wide whole-stage-codegen methods (e.g. the unrolled 64-term dot
-        # products in operators/ann.py & dedup_variants.py) exceed
-        # HotSpot's 8000-bytecode DontCompileHugeMethods threshold and
-        # would otherwise run in the bytecode interpreter — measured 10×
-        # slower than JIT'd on the cosine paths. Scale-independent JVM
-        # tuning (standard recommendation for wide generated code); set on
-        # both roles so a real cluster's executors JIT the same methods.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:-DontCompileHugeMethods"),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:-DontCompileHugeMethods"),
-        )
+        # wide whole-stage-codegen methods (e.g. the SQL rhp_signature
+        # fold in operators/ann.py) exceed HotSpot's 8000-bytecode
+        # DontCompileHugeMethods threshold and would otherwise run in the
+        # bytecode interpreter; with the flag embedding_neardup_lsh went
+        # 14.1 s → 5.1 s back-to-back on the 32-core bench host
+        # (OPTIMIZATION_r07.md). Set on both roles so a real cluster's
+        # executors JIT the same methods.
+        .config("spark.driver.extraJavaOptions", jvm_opts)
+        .config("spark.executor.extraJavaOptions", jvm_opts)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if attached:
+        running = set(
+            spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+            .getInputArguments()
+        )
+        missing = [o for o in jvm_opts.split() if o not in running]
+        if missing:
+            log.warning(
+                "get_spark attached to an existing JVM gateway that was "
+                "started without %s; wide generated methods may run in the "
+                "bytecode interpreter",
+                " ".join(missing),
+            )
+    return spark

@@ -1,10 +1,11 @@
 """Storage seam: parquet stage tables with snapshot manifests.
 
-North-rule target is Iceberg; this sandbox has no Iceberg jars, so each
-stage writes a plain parquet directory plus a ``manifest.json`` snapshot
-record (stage name, config fingerprint, row count, wall time, per-partition
-lineage).  Swapping ``format("parquet")`` for ``format("iceberg")`` +
-snapshot-id bookkeeping is localized to this module (SURVEY.md §7.1).
+North-rule target is Iceberg; without Iceberg jars each stage writes a
+plain parquet directory plus a ``<stage>.manifest.json`` snapshot record
+(stage name, config fingerprint, row count, wall time, per-partition
+lineage taken from the written files' footers).  Swapping
+``format("parquet")`` for ``format("iceberg")`` + snapshot-id bookkeeping
+is localized to this module (SURVEY.md §7.1).
 
 Resume contract: a stage is reusable iff its directory has Spark's
 ``_SUCCESS`` marker AND the manifest's config hash matches the current run
@@ -16,11 +17,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
 def config_hash(cfg: dict[str, Any]) -> str:
@@ -30,10 +34,9 @@ def config_hash(cfg: dict[str, Any]) -> str:
 
 
 class StageStore:
-    def __init__(self, root: str, cfg_hash: str, lineage: bool = True):
+    def __init__(self, root: str, cfg_hash: str):
         self.root = root
         self.cfg_hash = cfg_hash
-        self.lineage = lineage
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, stage: str) -> str:
@@ -64,123 +67,50 @@ class StageStore:
         with open(self._manifest_path(stage)) as f:
             return json.load(f)
 
-    # --- bucketed stage tables (exchange-free co-located joins) ---------
-    #
-    # Hash-bucketed at-rest layout is the 100 TB lever partitionBy cannot
-    # provide: two stage tables bucketed by the same key into the same
-    # bucket count join WITHOUT any Exchange — Spark's bucketed scan
-    # already satisfies the join's distribution requirement, so a resumed
-    # run's codes ⋈ clusters (url) or any downstream key-probe moves zero
-    # bytes over the network. Bucketing metadata lives in the session
-    # catalog, not the parquet footers, so re-attaching an existing
-    # bucketed directory in a NEW session just re-issues the CREATE TABLE
-    # DDL (schema + CLUSTERED BY recorded in the manifest) over the same
-    # LOCATION — the resume contract stays file-based.
-
-    def _table_name(self, stage: str) -> str:
-        slug = hashlib.sha256(
-            os.path.abspath(self.root).encode()
-        ).hexdigest()[:12]
-        return f"stage_{slug}_{stage}"
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        stage: str,
-        key: str,
-        buckets: int = 64,
-        extra_metrics: dict | None = None,
-    ) -> DataFrame:
-        """Materialize a stage hash-bucketed (and per-file sorted) by
-        ``key`` as an external table at the stage directory; returns the
-        catalog-backed DataFrame whose scans carry the bucket spec."""
-        spark = df.sparkSession
-        tbl = self._table_name(stage)
-        path = self._dir(stage)
-        t0 = time.monotonic()
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            df.write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        out = spark.table(tbl)
-        rows = out.count()
-        manifest = {
-            "stage": stage,
-            "snapshot_id": f"{stage}-{self.cfg_hash}",
-            "config_hash": self.cfg_hash,
-            "rows": rows,
-            "wall_ms": wall_ms,
-            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "bucket_by": {"key": key, "buckets": buckets},
-            "schema_ddl": df._jdf.schema().toDDL(),
-            "metrics": extra_metrics or {},
-        }
-        with open(self._manifest_path(stage), "w") as f:
-            json.dump(manifest, f, indent=1)
-        return out
-
-    def read_bucketed(self, spark: SparkSession, stage: str) -> DataFrame:
-        """Read a bucketed stage back WITH its bucket spec. If the table
-        is not in this session's catalog (fresh session resuming an
-        on-disk run), re-register the external table from the manifest's
-        recorded schema + bucket spec over the existing directory."""
-        tbl = self._table_name(stage)
-        if not spark.catalog.tableExists(tbl):
-            m = self.manifest(stage)
-            b = m["bucket_by"]
-            spark.sql(
-                f"CREATE TABLE {tbl} ({m['schema_ddl']}) USING PARQUET "
-                f"CLUSTERED BY ({b['key']}) SORTED BY ({b['key']}) "
-                f"INTO {b['buckets']} BUCKETS "
-                f"LOCATION '{self._dir(stage)}'"
-            )
-        return spark.table(tbl)
-
     def write(
-        self,
-        df: DataFrame,
-        stage: str,
-        extra_metrics: dict | None = None,
-        partition_by: list[str] | None = None,
+        self, df: DataFrame, stage: str, extra_metrics: dict | None = None
     ) -> DataFrame:
-        """Materialize a stage; returns the re-read DataFrame (cuts lineage,
-        making every downstream stage restartable from disk)."""
-        t0 = time.monotonic()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        path = self._dir(stage)
-        writer.parquet(path)
-        wall_ms = int((time.monotonic() - t0) * 1000)
+        """Materialize a stage and return it re-read from disk (cuts
+        lineage, making every downstream stage restartable from disk).
 
-        spark = df.sparkSession
-        out = spark.read.parquet(path)
-        lineage_rows: list[dict] = []
-        if self.lineage:
-            lineage_rows = [
-                {"partition_id": int(r["pid"]), "rows": int(r["rows"])}
-                for r in out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            ]
-        rows = sum(r["rows"] for r in lineage_rows) if lineage_rows else out.count()
+        The parquet write is the stage's only Spark job: ``rows`` and the
+        per-partition lineage come from the written part files' footers
+        (see :func:`_written_partitions`), and the re-read takes the
+        writer's schema instead of inferring it."""
+        t0 = time.monotonic()
+        path = self._dir(stage)
+        df.write.mode("overwrite").parquet(path)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        partitions = _written_partitions(path)
         manifest = {
             "stage": stage,
             "snapshot_id": f"{stage}-{self.cfg_hash}",
             "config_hash": self.cfg_hash,
-            "rows": rows,
+            "rows": sum(p["rows"] for p in partitions),
             "wall_ms": wall_ms,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partition_by": partition_by or [],
-            "partitions": lineage_rows,
+            "partitions": partitions,
             "metrics": extra_metrics or {},
         }
         with open(self._manifest_path(stage), "w") as f:
             json.dump(manifest, f, indent=1)
-        return out
+        return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def _written_partitions(path: str) -> list[dict]:
+    """Per-partition lineage of a parquet directory: one
+    ``{"partition_id", "rows"}`` entry per write task, in task order.
+
+    Spark names each task's output ``part-<task partition id>-…``, and every
+    parquet footer records its row count, so this reads footers on the
+    driver and runs no Spark job (Iceberg keeps the same per-file record
+    count in its manifests). A task whose partition was empty writes no
+    file and has no entry."""
+    rows: dict[int, int] = {}
+    for name in os.listdir(path):
+        m = _PART_FILE.match(name)
+        if m:
+            pid = int(m.group(1))
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return [{"partition_id": pid, "rows": n} for pid, n in sorted(rows.items())]

@@ -47,26 +47,48 @@ FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 # scan. The bucket count must stay constant for a state dir's lifetime
 # (it is baked into the stored directory layout); indexes written before
 # this column existed are detected by the missing column and read unpruned.
-# The prefix expression and bucket count are shared with the batch
-# pipeline's at-rest band stage table (operators/lsh.py).
+# The prefix expression and bucket count live in operators/lsh.py.
 from iscc_specs_spark.operators.lsh import (  # noqa: E402
     BAND_PFX_BUCKETS as INDEX_BUCKETS,
     band_pfx,
 )
 
 
+def _read_history(
+    spark: SparkSession, path: str, schema: str | None = None
+) -> DataFrame | None:
+    """State table at ``path``, or None iff it does not exist yet: a missing
+    path, or a directory an empty first batch left with only ``_SUCCESS``
+    (no schema to infer — semantically the same as "no history"). Any other
+    failure — corrupt files, permissions, transient FS faults — propagates
+    and fails the stream rather than silently skipping vs-history flagging
+    for the batch."""
+    from pyspark.errors import AnalysisException
+
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if any(
+            m in str(e)
+            for m in (
+                "PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA"
+            )
+        ):
+            return None
+        raise
+
+
+def _read_flags(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    df = _read_history(spark, path, schema)
+    return spark.createDataFrame([], schema) if df is None else df
+
+
 def read_dup_flags(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated dup-flags state, schema-stable even when no batch has
     emitted a flag yet (empty dir → empty DataFrame, absent dir → empty
     DataFrame, never a schema-inference failure)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(FLAGS_SCHEMA).parquet(f"{state_dir}/dup_flags")
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], FLAGS_SCHEMA)
-        raise
+    return _read_flags(spark, f"{state_dir}/dup_flags", FLAGS_SCHEMA)
 
 
 def read_pages_stream(
@@ -98,19 +120,27 @@ def _start_stream(
     return writer.start()
 
 
+def _write_batch(
+    df: DataFrame, path: str, batch_id: int, parts: tuple[str, ...] = ()
+) -> None:
+    """Write ``df`` as ingest batch ``batch_id`` under ``path``, partitioned
+    by (ingest_batch, *parts), with dynamic partition overwrite: a replayed
+    batch overwrites its own partitions and nothing else (exactly-once)."""
+    (
+        df.withColumn("ingest_batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch", *parts)
+        .parquet(path)
+    )
+
+
 def _partition_overwrite_sink(out_dir: str):
-    """``foreachBatch`` body shared by the three codes tracks: exactly-once
-    via per-batch ``ingest_batch`` dynamic partition overwrite (a replayed
-    batch overwrites its own partition)."""
+    """``foreachBatch`` body shared by the three codes tracks: each
+    micro-batch lands in its own ``ingest_batch`` partition."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(out_dir)
-        )
+        _write_batch(batch_df, out_dir, batch_id)
 
     return sink
 
@@ -234,27 +264,6 @@ def start_incremental_dedup_stream(
         )
 
     return _start_stream(codes_stream, sink, checkpoint_dir, trigger_once)
-
-
-def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
-    """History codes table, or None iff the path does not exist yet (first
-    batch). Any other failure — corrupt files, permissions, transient FS
-    faults — propagates and fails the stream rather than silently skipping
-    vs-history flagging for the batch."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if (
-            "PATH_NOT_FOUND" in str(e)
-            or "Path does not exist" in str(e)
-            # an empty first batch writes only _SUCCESS — no schema to
-            # infer yet, semantically the same as "no history"
-            or "UNABLE_TO_INFER_SCHEMA" in str(e)
-        ):
-            return None
-        raise
 
 
 def _effective_index_buckets(
@@ -620,18 +629,9 @@ def process_dedup_batch(
     # flags + codes + this batch's band-index rows, each into its own
     # ingest_batch partition (replay overwrites itself in all three); the
     # band index is additionally partitioned by band_pfx for probe pruning
-    for df, sub, parts in (
-        (flags, "dup_flags", ("ingest_batch",)),
-        (batch, "codes", ("ingest_batch",)),
-        (own_bands, "bands", ("ingest_batch", "band_pfx")),
-    ):
-        (
-            df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(f"{state_dir}/{sub}")
-        )
+    _write_batch(flags, f"{state_dir}/dup_flags", batch_id)
+    _write_batch(batch, f"{state_dir}/codes", batch_id)
+    _write_batch(own_bands, f"{state_dir}/bands", batch_id, ("band_pfx",))
 
 
 def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -697,16 +697,7 @@ def _url_pfx(buckets: int):
 def read_url_flags(spark: SparkSession, state_dir: str) -> DataFrame:
     """Accumulated url-recrawl flags, schema-stable when empty (same
     contract as :func:`read_dup_flags`)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(URL_FLAGS_SCHEMA).parquet(
-            f"{state_dir}/url_flags"
-        )
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], URL_FLAGS_SCHEMA)
-        raise
+    return _read_flags(spark, f"{state_dir}/url_flags", URL_FLAGS_SCHEMA)
 
 
 def read_url_index(
@@ -820,21 +811,13 @@ def process_url_batch(
         )
         flags = intra.unionByName(recrawl)
 
-    for df, sub, parts in (
-        (flags, "url_flags", ("ingest_batch",)),
-        (
-            keeper.select("canon_url", "url", "last_ts", "url_pfx"),
-            "urls",
-            ("ingest_batch", "url_pfx"),
-        ),
-    ):
-        (
-            df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(f"{state_dir}/{sub}")
-        )
+    _write_batch(flags, f"{state_dir}/url_flags", batch_id)
+    _write_batch(
+        keeper.select("canon_url", "url", "last_ts", "url_pfx"),
+        f"{state_dir}/urls",
+        batch_id,
+        ("url_pfx",),
+    )
 
 
 def start_url_dedup_stream(
