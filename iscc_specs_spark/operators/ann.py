@@ -159,8 +159,14 @@ def rhp_buckets_arrow(
     without a join-back — no shuffle of the embedding column, same
     single-crossing posture as the codegen stage); batch temporaries are
     n × nbits × dim float64 — a few MB at the session's Arrow batch size.
+    ``id_col`` and ``passthrough`` keep their types from ``df.schema``.
+
+    Input contract: every ``vec_col`` value is a non-null array of length
+    ``dim``; a batch holding a null or ragged vector raises a ValueError
+    naming ``vec_col`` and ``dim`` before any vector is stacked.
     """
     import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     planes = np.stack(
         [
@@ -173,6 +179,14 @@ def rhp_buckets_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            lens = pdf[vec_col].map(lambda v: -1 if v is None else len(v))
+            if (lens != dim).any():
+                bad = int(lens[lens != dim].iloc[0])
+                raise ValueError(
+                    f"rhp_buckets_arrow: {vec_col} must be a non-null array "
+                    f"of length dim={dim}, got "
+                    + ("null" if bad < 0 else f"length {bad}")
+                )
             V = np.array(list(pdf[vec_col]), dtype=np.float64)
             sigs = np.empty((len(pdf), ntables), dtype=np.int64)
             for t in range(ntables):
@@ -183,10 +197,9 @@ def rhp_buckets_arrow(
             out["sigs"] = list(sigs)
             yield pd.DataFrame(out)
 
-    pass_schema = ", ".join(
-        [f"{id_col} long"]
-        + [f"{c} array<double>" for c in passthrough]
-        + ["sigs array<long>"]
+    pass_schema = StructType(
+        [df.schema[id_col], *(df.schema[c] for c in passthrough)]
+        + [StructField("sigs", ArrayType(LongType()))]
     )
     in_cols = [id_col, vec_col] + [c for c in passthrough if c != vec_col]
     return df.select(*in_cols).mapInPandas(run, schema=pass_schema)

@@ -298,6 +298,10 @@ def candidate_pairs(band_table: DataFrame, bucket_cap: int = 64) -> DataFrame:
     Buckets ≤ bucket_cap: full self-join (url_a < url_b).
     Buckets > bucket_cap: hub-and-spoke to min url (O(k) not O(k²)).
     Returns distinct (url_a, url_b, src).
+
+    No production code calls this: it is the reference route (followed by
+    :func:`verify_pairs`) that ``tests/test_lsh_hot_bucket.py`` checks
+    :func:`verified_bucket_pairs` against.
     """
     sizes = band_table.groupBy("band_id", "band_hash").agg(F.count("*").alias("bucket_n"))
     # same partitioning key as the groupBy → exchange reuse, no extra shuffle

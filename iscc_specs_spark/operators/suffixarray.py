@@ -140,6 +140,14 @@ def suffix_ranks(
 
     The DuckDB twin is one window expression over exploded positions:
     ``dense_rank() OVER (ORDER BY substring(text, pos, max_prefix))``.
+
+    When ``max_prefix`` (for None: the longest text) is at most
+    ``DIRECT_RANK_MAX``, the direct bounded-prefix path runs no doubling
+    rounds and returns a consume-once plan: it is not checkpointed, so
+    every action on it re-runs the rank window over the checkpointed
+    range-partitioned keys. A caller that reads it more than once should
+    ``localCheckpoint`` it first. Longer prefixes return a checkpointed
+    table.
     """
     txt = F.coalesce(F.col(text_col), F.lit(""))
     n = F.length(txt)

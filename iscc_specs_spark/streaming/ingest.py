@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from iscc_specs_spark.operators.codegen import compute_codes
@@ -44,14 +45,19 @@ FLAGS_SCHEMA = "url string, dup_of string, src string, ingest_batch int"
 # pruning, band_pfx gives the vs-history probe *static partition pruning*
 # down to the new batch's own key prefixes — per-batch probe I/O is bounded
 # by |distinct new prefixes| / INDEX_BUCKETS of the index instead of a full
-# scan. The bucket count must stay constant for a state dir's lifetime
-# (it is baked into the stored directory layout); indexes written before
-# this column existed are detected by the missing column and read unpruned.
-# The prefix expression and bucket count live in operators/lsh.py.
+# scan. The bucket count is baked into the stored directory layout, so each
+# index records the one it was written with (``_INDEX_META.json``, see
+# :func:`_index_buckets`). This is the only layout: an index without the
+# prefix column fails the probe with an analysis error before the batch
+# writes its flags. The prefix expression and bucket count live in
+# operators/lsh.py.
 from iscc_specs_spark.operators.lsh import (  # noqa: E402
     BAND_PFX_BUCKETS as INDEX_BUCKETS,
     band_pfx,
 )
+
+# columns of the band index's probe view
+BAND_INDEX_COLS = ("url", "band_id", "band_hash")
 
 
 def _read_history(
@@ -226,7 +232,6 @@ def start_incremental_dedup_stream(
     tracks: tuple[str, ...] = ("text", "data"),
     trigger_once: bool = True,
     bucket_cap: int = 64,
-    index_buckets: int = INDEX_BUCKETS,
 ) -> StreamingQuery:
     """Streaming near-dup flagging: each micro-batch's pages are coded and
     LSH-matched against every previously ingested document, then appended to
@@ -259,150 +264,52 @@ def start_incremental_dedup_stream(
     codes_stream = compute_codes(pages_stream, tracks)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_dedup_batch(
-            batch_df, batch_id, state_dir, bucket_cap, index_buckets
-        )
+        process_dedup_batch(batch_df, batch_id, state_dir, bucket_cap)
 
     return _start_stream(codes_stream, sink, checkpoint_dir, trigger_once)
 
 
-def _effective_index_buckets(
-    state_dir: str, requested: int, sub: str = "bands"
-) -> int:
-    """The band index's ON-DISK bucket count always wins over the caller's
-    parameter: ``band_pfx`` partition pruning is only correct when probe
-    prefixes are computed with the same modulus the index was written
-    with — a mismatched parameter would silently prune away true
-    vs-history matches (missed dup flags, no error). First writer records
-    the modulus in ``bands/_INDEX_META.json`` (underscore-prefixed files
-    are invisible to Spark's parquet listing); later batches — and
-    restarts with a different default — derive it from there. Local-FS
-    JSON is the sandbox seam; at warehouse scale this is one more field in
-    the table's manifest (sources/storage.py)."""
-    import json
-    import os
-
-    meta = os.path.join(state_dir, sub, "_INDEX_META.json")
-    if os.path.exists(meta):
-        with open(meta) as f:
-            return int(json.load(f)["index_buckets"])
-    return requested
-
-
-def _record_index_buckets(state_dir: str, n: int, sub: str = "bands") -> None:
+def _index_buckets(state_dir: str, sub: str) -> int:
+    """Bucket modulus of the index at ``state_dir/sub``: the one recorded in
+    its ``_INDEX_META.json``, or ``INDEX_BUCKETS``, recorded there on first
+    contact. The recorded value always wins, so a state dir written with
+    another modulus still probes correctly: prefix pruning is only sound
+    when probe prefixes use the modulus the index was written with, and a
+    mismatch would silently prune away true matches (missed flags, no
+    error). Underscore-prefixed files are invisible to Spark's parquet
+    listing. Local-FS JSON is the sandbox seam; at warehouse scale this is
+    one more field in the table's manifest (sources/storage.py)."""
     import json
     import os
 
     meta = os.path.join(state_dir, sub, "_INDEX_META.json")
     if not os.path.exists(meta):
         os.makedirs(os.path.dirname(meta), exist_ok=True)
-        # atomic: a crash mid-write must not leave a truncated JSON file —
-        # _effective_index_buckets would raise on EVERY later batch (the
-        # one crash window with no self-healing path)
+        # atomic: a crash mid-write must not leave a truncated JSON file,
+        # which would fail every later batch
         tmp = meta + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"index_buckets": n}, f)
+            json.dump({"index_buckets": INDEX_BUCKETS}, f)
         os.replace(tmp, meta)
+    with open(meta) as f:
+        return int(json.load(f)["index_buckets"])
 
 
-def _migrate_legacy_band_index(
-    spark: SparkSession, state_dir: str, index_buckets: int
-) -> None:
-    """One-time in-place upgrade of a pre-``band_pfx`` band index.
-
-    A legacy index is partitioned by ``ingest_batch`` only; merely *reading*
-    it unpruned would be correct, but the batch's own band rows are written
-    ``(ingest_batch, band_pfx)``-partitioned into the same directory, and
-    Spark's parquet reader refuses mixed partition depths ('Conflicting
-    directory structures') — so the stream would survive exactly one batch.
-    On first contact the legacy table is therefore rewritten once with
-    ``band_pfx`` computed under each row's OWN ``ingest_batch`` partition
-    (replay semantics keep holding), staged through a sibling directory and
-    swapped in with renames. Crash windows are replay-safe: an interrupted
-    swap leaves either the untouched legacy table (migration simply reruns)
-    or a complete staged table (the swap is finished below); if ``bands/``
-    is missing entirely, ``process_dedup_batch``'s codes-backfill path
-    rebuilds the index from scratch. Local-FS renames are the sandbox seam
-    — on Iceberg this whole function is partition-spec evolution, no
-    rewrite."""
-    import json
-    import os
-    import shutil
-
-    bands = os.path.join(state_dir, "bands")
-    staging = os.path.join(state_dir, "bands__migrating")
-    legacy_dir = os.path.join(state_dir, "bands__legacy")
-    # staging is COMPLETE iff its meta file exists AND parses: the meta is
-    # written (atomically, today) only after the parquet write finishes —
-    # but a pre-upgrade version wrote it non-atomically, so a crash could
-    # leave a truncated JSON which, once renamed into bands/, would make
-    # _effective_index_buckets raise on every later batch with no
-    # self-healing path. An unparsable/key-less meta therefore counts as
-    # an INCOMPLETE staging (rmtree + rebuild), never as done.
-    def _staging_meta_ok() -> bool:
-        try:
-            with open(os.path.join(staging, "_INDEX_META.json")) as f:
-                return isinstance(json.load(f).get("index_buckets"), int)
-        except (OSError, ValueError):
-            return False
-
-    staging_done = _staging_meta_ok()
-    if not os.path.isdir(bands):
-        if os.path.isdir(staging):
-            if staging_done:
-                os.rename(staging, bands)  # finish an interrupted swap
-            else:
-                shutil.rmtree(staging)  # partial build: backfill rebuilds
-        if os.path.isdir(legacy_dir):
-            shutil.rmtree(legacy_dir)  # crash landed mid-swap: old copy
-        return
-    hb = _read_history(spark, bands)
-    if hb is None:
-        # bands/ exists but holds no readable data (e.g. a meta-only dir
-        # left by a crashed first batch). If a COMPLETE staged copy exists,
-        # finish the swap instead of letting the codes-backfill path
-        # rebuild the whole index from scratch.
-        if os.path.isdir(staging):
-            if staging_done:
-                shutil.rmtree(bands)
-                os.rename(staging, bands)
-            else:
-                shutil.rmtree(staging)
-        if os.path.isdir(legacy_dir):
-            shutil.rmtree(legacy_dir)
-        return
-    if "band_pfx" in hb.columns:
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)  # stale leftover from a completed swap
-        if os.path.isdir(legacy_dir):
-            # crash landed between the staging→bands rename and the legacy
-            # cleanup: the migrated table is live, drop the old copy
-            shutil.rmtree(legacy_dir)
-        return
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)  # incomplete prior attempt: rebuild
-    # a legacy-layout dir can still carry a meta (a crash between the old
-    # record-meta-first ordering's two steps): the recorded modulus wins
-    # over the parameter, same invariant as the probe path
-    index_buckets = _effective_index_buckets(state_dir, index_buckets)
-    migrated = hb.withColumn("band_pfx", band_pfx(index_buckets))
-    (
-        migrated.write.mode("overwrite")
-        .partitionBy("ingest_batch", "band_pfx")
-        .parquet(staging)
-    )
-    # the modulus the migrated layout was built with must travel with it —
-    # written atomically AFTER the parquet write, doubling as the
-    # staging-complete marker checked above
-    tmp = os.path.join(staging, "_INDEX_META.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"index_buckets": index_buckets}, f)
-    os.replace(tmp, os.path.join(staging, "_INDEX_META.json"))
-    if os.path.isdir(legacy_dir):
-        shutil.rmtree(legacy_dir)
-    os.rename(bands, legacy_dir)
-    os.rename(staging, bands)
-    shutil.rmtree(legacy_dir)
+def _probe_view(
+    index: DataFrame,
+    batch_id: int,
+    pfx_col: str,
+    new_pfx: list[int] | None,
+    cols: tuple[str, ...],
+) -> DataFrame:
+    """Replay-safe ``ingest_batch < batch_id`` plus, when the probe supplies
+    its prefix set, a literal ``pfx_col IN (...)``. Both predicates are on
+    partition columns, so they appear as PartitionFilters in the plan and
+    the scan lists only matching partition directories (static pruning)."""
+    index = index.where(F.col("ingest_batch") < F.lit(batch_id))
+    if new_pfx is not None:
+        index = index.where(F.col(pfx_col).isin(sorted(new_pfx)))
+    return index.select(*cols)
 
 
 def read_band_index(
@@ -411,21 +318,13 @@ def read_band_index(
     batch_id: int,
     new_pfx: list[int] | None = None,
 ) -> DataFrame | None:
-    """Pruned view of the maintained band index for batch ``batch_id``'s
-    vs-history probe: replay-safe ``ingest_batch < batch_id`` plus — when
-    the layout carries ``band_pfx`` and the probe supplies its prefix set —
-    a literal ``band_pfx IN (...)`` partition filter, so the scan lists only
-    matching partition directories (static pruning: both predicates are on
-    partition columns and appear as PartitionFilters in the plan). Returns
-    None iff the index does not exist yet (legacy state dir — caller
-    backfills)."""
+    """Pruned ``(url, band_id, band_hash)`` view of the maintained band index
+    for batch ``batch_id``'s vs-history probe (see :func:`_probe_view`).
+    Returns None iff no batch has written the index yet."""
     hb = _read_history(spark, f"{state_dir}/bands")
     if hb is None:
         return None
-    hb = hb.where(F.col("ingest_batch") < F.lit(batch_id))
-    if new_pfx is not None and "band_pfx" in hb.columns:
-        hb = hb.where(F.col("band_pfx").isin(sorted(new_pfx)))
-    return hb.select("url", "band_id", "band_hash")
+    return _probe_view(hb, batch_id, "band_pfx", new_pfx, BAND_INDEX_COLS)
 
 
 def process_dedup_batch(
@@ -433,7 +332,6 @@ def process_dedup_batch(
     batch_id: int,
     state_dir: str,
     bucket_cap: int = 64,
-    index_buckets: int = INDEX_BUCKETS,
 ) -> None:
     """One micro-batch of the incremental dedup stream (the ``foreachBatch``
     body, exposed at module level so replay semantics are testable and the
@@ -455,39 +353,39 @@ def process_dedup_batch(
     cost would grow linearly with corpus age; with it, per-batch work is
     O(|batch|) banding + one pruned probe of the index.
 
+    The index is read once per batch, and its presence is the "has
+    history" test (a replay of batch 0 finds it, but the ``< batch_id``
+    filter leaves the probe empty, so the flags are the same).
+
     Index layout: partitioned by (ingest_batch, band_pfx) where band_pfx =
-    pmod(xxhash64(band_id, band_hash), index_buckets). Before the probe,
-    the new batch's ≤ index_buckets distinct prefixes are collected (a
-    bounded driver list, same class as the lineage/metric collects) and
-    pushed down as a literal IN partition filter — the probe's scan lists
-    only matching partition directories (static pruning, visible in the
-    plan's PartitionFilters and in ``inputFiles()``), so probe I/O per
-    batch is bounded by the new batch's key-prefix coverage of the index
-    rather than the index's full size. The bucket modulus is recorded in
-    the index's ``_INDEX_META.json`` on first write and ALWAYS wins over
-    the ``index_buckets`` parameter afterwards (a mismatched modulus would
-    silently prune away true matches); a legacy index without the
-    ``band_pfx`` column is migrated in place on first contact (see
-    :func:`_migrate_legacy_band_index` — mixed partition depths would fail
-    the next batch's read, so read-unpruned is not a stable posture).
+    pmod(xxhash64(band_id, band_hash), modulus), the modulus being the one
+    recorded in ``bands/_INDEX_META.json`` (:func:`_index_buckets`). Before
+    the probe, the new batch's ≤ modulus distinct prefixes are collected
+    (a bounded driver list) and pushed down as a literal IN partition
+    filter — the probe's scan lists only matching partition directories
+    (static pruning, visible in the plan's PartitionFilters and in
+    ``inputFiles()``), so probe I/O per batch is bounded by the new
+    batch's key-prefix coverage of the index rather than the index's full
+    size. An index without the ``band_pfx`` column fails the probe with an
+    analysis error before the batch writes its flags, codes or bands.
     """
     from iscc_specs_spark.operators import lsh
 
     spark = batch_df.sparkSession
-    # migrate BEFORE recording the modulus: the old record-first ordering
-    # could re-create bands/ as a meta-only dir during a replayed crash
-    # window, making the migration's finish-swap branch unreachable (the
-    # fallback then rebuilt the whole index). The migration derives its
-    # own effective modulus; _effective afterwards picks up whichever
-    # meta (migrated or pre-existing) is now live.
-    _migrate_legacy_band_index(spark, state_dir, index_buckets)
-    index_buckets = _effective_index_buckets(state_dir, index_buckets)
-    _record_index_buckets(state_dir, index_buckets)
+    # read before _index_buckets records the meta: the meta alone creates
+    # bands/, and batch 0 would then pay for reading an empty index
+    index = _read_history(spark, f"{state_dir}/bands")
+    buckets = _index_buckets(state_dir, "bands")
     batch = batch_df.localCheckpoint(eager=True)
+    # materialized once: the slim representative table feeds the
+    # within-batch pairs, the probe's banding and its verify join — lazy,
+    # each reference would re-run the aggregation (CLAUDE.md rule)
+    slim = lsh.rep_codes(batch).localCheckpoint(eager=True)
 
     # within-batch pairs (standard path; url_a < url_b → flag url_b)
-    intra = lsh.dup_pairs(batch, bucket_cap=bucket_cap,
-                          compute_jaccard=False).select(
+    intra = lsh.dup_pairs(
+        batch, bucket_cap=bucket_cap, compute_jaccard=False, slim=slim
+    ).select(
         F.col("url_b").alias("url"), F.col("url_a").alias("dup_of"),
         F.lit("intra_batch").alias("src"),
     )
@@ -497,54 +395,40 @@ def process_dedup_batch(
     # exact-dup representative)
     own_bands = (
         lsh.minhash_bands(batch).union(lsh.simhash_bands(batch))
-    ).withColumn("band_pfx", band_pfx(index_buckets))
+    ).withColumn("band_pfx", band_pfx(buckets))
 
-    hist = _read_history(spark, f"{state_dir}/codes")
-    if hist is not None:
-        # exclude this batch's own partition: a replayed batch must not
-        # match against its own prior (uncommitted) write
-        hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
-    if hist is not None and hist.head(1):
-        # materialize both: new_slim is a groupBy shuffle consumed by the
-        # banding AND the verify join; nb feeds the prefix collect, the
-        # key semi-join and the broadcast probe — lazy, each reference
-        # would re-run the aggregation + banding (CLAUDE.md rule)
-        new_slim = lsh.rep_codes(batch).localCheckpoint(eager=True)
-        hist_slim = hist.select(
-            "url", "cid_body", "simhash", "minhash", "tophash"
-        )
+    flags = intra
+    if index is not None:
+        # nb feeds the prefix collect, the key semi-join and the broadcast
+        # probe: materialized once for the same reason as slim
         nb = (
-            lsh.minhash_bands(new_slim)
-            .union(lsh.simhash_bands(new_slim))
+            lsh.minhash_bands(slim)
+            .union(lsh.simhash_bands(slim))
             .localCheckpoint(eager=True)
         )
-        # the new batch's key prefixes: ≤ index_buckets ints, collected on
-        # the driver and pushed down as a literal partition filter (static
+        # the new batch's key prefixes: ≤ modulus ints, collected on the
+        # driver and pushed down as a literal partition filter (static
         # pruning — the probe never lists non-matching band_pfx dirs)
         new_pfx = sorted(
             r[0]
-            for r in nb.select(band_pfx(index_buckets).alias("p"))
+            for r in nb.select(band_pfx(buckets).alias("p"))
             .distinct()
             .collect()
         )
-        hb = read_band_index(spark, state_dir, batch_id, new_pfx)
-        if hb is None:
-            # legacy state dir written before the index existed: backfill
-            # it once from history codes, under each history row's OWN
-            # ingest_batch partition (so replay semantics — `< batch_id`
-            # prunes only the replayed batch — keep holding afterwards)
-            backfill = (
-                lsh.minhash_bands(hist, keep=("ingest_batch",)).union(
-                    lsh.simhash_bands(hist, keep=("ingest_batch",))
+        hb = _probe_view(index, batch_id, "band_pfx", new_pfx, BAND_INDEX_COLS)
+        # history codes read with slim's columns as the schema (no
+        # schema-inference job), excluding this batch's own partition: a
+        # replayed batch must not match against its own prior write
+        hist_slim = (
+            spark.read.schema(
+                T.StructType(
+                    [*slim.schema, T.StructField("ingest_batch", T.IntegerType())]
                 )
-            ).withColumn("band_pfx", band_pfx(index_buckets))
-            (
-                backfill.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch", "band_pfx")
-                .parquet(f"{state_dir}/bands")
             )
-            hb = read_band_index(spark, state_dir, batch_id, new_pfx)
+            .parquet(f"{state_dir}/codes")
+            .where(F.col("ingest_batch") < F.lit(batch_id))
+            .drop("ingest_batch")
+        )
         # vs-history candidates with the engine-standard hot-bucket cap:
         # restrict the index to the new batch's band keys first (semi-join
         # — each history row matches once per key, NOT once per new url),
@@ -601,7 +485,7 @@ def process_dedup_batch(
             .withColumn("src", F.lit("lsh"))
             .dropDuplicates(["url_a", "url_b"])
         )
-        both = new_slim.select(
+        both = slim.select(
             F.col("url").alias("url_a"), F.col("cid_body").alias("cid_a"),
             F.col("simhash").alias("sim_a"), F.col("tophash").alias("top_a"),
         ).join(cand, "url_a").join(
@@ -623,8 +507,6 @@ def process_dedup_batch(
             F.lit("vs_history").alias("src"),
         )
         flags = intra.unionByName(cross)
-    else:
-        flags = intra
 
     # flags + codes + this batch's band-index rows, each into its own
     # ingest_batch partition (replay overwrites itself in all three); the
@@ -688,6 +570,8 @@ def curate_state(spark: SparkSession, state_dir: str) -> DataFrame:
 URL_FLAGS_SCHEMA = (
     "url string, dup_of string, canon_url string, src string, ingest_batch int"
 )
+# columns of the url index's probe view
+URL_INDEX_COLS = ("canon_url", "url", "last_ts", "ingest_batch")
 
 
 def _url_pfx(buckets: int):
@@ -706,26 +590,20 @@ def read_url_index(
     batch_id: int,
     new_pfx: list[int] | None = None,
 ) -> DataFrame | None:
-    """Pruned view of the maintained url index for batch ``batch_id``'s
-    re-crawl probe: replay-safe ``ingest_batch < batch_id`` plus a literal
-    ``url_pfx IN (...)`` partition filter when the probe supplies its
-    prefix set (both predicates on partition columns — static pruning,
-    same contract as :func:`read_band_index`). Returns None iff the index
-    does not exist yet (first batch)."""
+    """Pruned ``(canon_url, url, last_ts, ingest_batch)`` view of the
+    maintained url index for batch ``batch_id``'s re-crawl probe, pruned on
+    ``url_pfx`` the same way as :func:`read_band_index`. Returns None iff
+    no batch has written the index yet."""
     hist = _read_history(spark, f"{state_dir}/urls")
     if hist is None:
         return None
-    hist = hist.where(F.col("ingest_batch") < F.lit(batch_id))
-    if new_pfx is not None and "url_pfx" in hist.columns:
-        hist = hist.where(F.col("url_pfx").isin(sorted(new_pfx)))
-    return hist.select("canon_url", "url", "last_ts", "ingest_batch")
+    return _probe_view(hist, batch_id, "url_pfx", new_pfx, URL_INDEX_COLS)
 
 
 def process_url_batch(
     batch_df: DataFrame,
     batch_id: int,
     state_dir: str,
-    url_buckets: int = INDEX_BUCKETS,
 ) -> None:
     """One micro-batch of streaming canonical-URL crawl dedup (the
     ``foreachBatch`` body, module-level so replay semantics are testable).
@@ -752,15 +630,16 @@ def process_url_batch(
          itself and (via ``ingest_batch < batch_id`` in the probe) never
          matches its own prior uncommitted write.
 
-    The bucket modulus is recorded in ``urls/_INDEX_META.json`` on first
-    write and always wins afterwards (same invariant as the band index:
-    a mismatched modulus would silently prune true re-crawl matches).
+    The bucket modulus is the one recorded in ``urls/_INDEX_META.json``
+    (:func:`_index_buckets`, same invariant as the band index), and the
+    index is read once per batch: its presence is the "has history" test.
     """
     from iscc_specs_spark.operators.urls import canonical_url, url_dedup
 
     spark = batch_df.sparkSession
-    url_buckets = _effective_index_buckets(state_dir, url_buckets, sub="urls")
-    _record_index_buckets(state_dir, url_buckets, sub="urls")
+    # read before the meta record creates urls/ (same as the band index)
+    index = _read_history(spark, f"{state_dir}/urls")
+    buckets = _index_buckets(state_dir, "urls")
     batch = (
         batch_df.select("url", "warc_ts")
         .withColumn("canon_url", canonical_url("url"))
@@ -782,13 +661,13 @@ def process_url_batch(
         )
     )
 
-    keeper = kept.withColumn("url_pfx", _url_pfx(url_buckets))
-    new_pfx = sorted(
-        r[0] for r in keeper.select("url_pfx").distinct().collect()
-    )
-    hist = read_url_index(spark, state_dir, batch_id, new_pfx)
+    keeper = kept.withColumn("url_pfx", _url_pfx(buckets))
     flags = intra
-    if hist is not None and hist.head(1):
+    if index is not None:
+        new_pfx = sorted(
+            r[0] for r in keeper.select("url_pfx").distinct().collect()
+        )
+        hist = _probe_view(index, batch_id, "url_pfx", new_pfx, URL_INDEX_COLS)
         first = (
             hist.groupBy("canon_url")
             .agg(F.min(F.struct("ingest_batch", "last_ts", "url")).alias("m"))
@@ -825,7 +704,6 @@ def start_url_dedup_stream(
     state_dir: str,
     checkpoint_dir: str,
     trigger_once: bool = True,
-    url_buckets: int = INDEX_BUCKETS,
 ) -> StreamingQuery:
     """Streaming re-crawl dedup: flag every page whose canonical url was
     already ingested (or arrives under several spellings in one batch)
@@ -836,6 +714,6 @@ def start_url_dedup_stream(
     edge list."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_url_batch(batch_df, batch_id, state_dir, url_buckets)
+        process_url_batch(batch_df, batch_id, state_dir)
 
     return _start_stream(pages_stream, sink, checkpoint_dir, trigger_once)

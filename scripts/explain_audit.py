@@ -14,11 +14,13 @@ Usage: python scripts/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from iscc_specs_spark.session import get_spark  # noqa: E402
 
@@ -30,9 +32,18 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+def node_ids(txt: str, op: str) -> set[str]:
+    """Distinct ids of the ``op`` nodes in an ``explain("formatted")`` text.
+    Each node shows up twice, as a tree line ``op (N)`` and as a detail
+    header ``(N) op``, so counting matches would count every node twice."""
+    tree = re.findall(rf"\b{op} \((\d+)\)", txt)
+    headers = re.findall(rf"^\((\d+)\) {op}\b", txt, re.M)
+    return set(tree) | set(headers)
+
+
 def audit(name: str, df, notes: str) -> str:
     txt = plan_text(df)
-    n_exchange = len(re.findall(r"\bExchange\b", txt))
+    n_exchange = len(node_ids(txt, "Exchange"))
     n_wsc = len(set(re.findall(r"codegen id : (\d+)", txt)))
     joins = sorted(set(re.findall(r"(\w*HashJoin|SortMergeJoin|BroadcastNestedLoopJoin)", txt)))
     pushed = re.findall(r"PushedFilters: \[(.*?)\]", txt)
@@ -280,7 +291,7 @@ def main():
         "never sorts in a single task (partial_min_by combines map-side).",
     ))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(sections))
     print("wrote PLANS.md")
     spark.stop()

@@ -83,6 +83,43 @@ def test_rhp_lsh_requires_dim(emb):
         ann.rhp_lsh_topk(df, df.where(df.vec_id < 2), k=3)
 
 
+def test_rhp_buckets_arrow_keeps_input_types(spark):
+    """A string id and a string passthrough keep their types through the
+    Arrow pass, and the signatures equal the SQL fold's."""
+    rng = np.random.RandomState(5)
+    rows = [(f"doc-{i}", rng.randn(8).tolist(), f"tag{i}") for i in range(12)]
+    df = spark.createDataFrame(rows, "doc string, v array<double>, tag string")
+    out = ann.rhp_buckets_arrow(
+        df, nbits=6, ntables=2, seed=11, dim=8, id_col="doc",
+        passthrough=("tag",),
+    )
+    assert out.schema["doc"].dataType == df.schema["doc"].dataType
+    assert out.schema["tag"].dataType == df.schema["tag"].dataType
+    got = {r["doc"]: (r["tag"], list(r["sigs"])) for r in out.collect()}
+    sql = df.select(
+        "doc", "tag",
+        *[
+            ann.rhp_signature("v", ann.hyperplanes(8, 6, 11 + 1000 * t)).alias(f"s{t}")
+            for t in range(2)
+        ],
+    )
+    want = {r["doc"]: (r["tag"], [r["s0"], r["s1"]]) for r in sql.collect()}
+    assert got == want and len(got) == 12
+
+
+@pytest.mark.parametrize("bad", [[1.0, 2.0], None], ids=["ragged", "null"])
+def test_rhp_buckets_arrow_rejects_bad_vectors(spark, bad):
+    from pyspark.errors import PythonException
+
+    df = spark.createDataFrame(
+        [(1, [0.5] * 4), (2, bad)], "vec_id long, v array<double>"
+    )
+    with pytest.raises(
+        PythonException, match="v must be a non-null array of length dim=4"
+    ):
+        ann.rhp_buckets_arrow(df, nbits=4, ntables=1, seed=7, dim=4).collect()
+
+
 def test_ivf_build_partition_invariant(spark):
     """The quantizer is a pure function of the corpus — repartitioning must
     change neither centroids nor assignments (fixed-point integer centroid

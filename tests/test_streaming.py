@@ -508,44 +508,54 @@ def test_band_index_probe_plan_is_pruned_scan(spark, tmp_path):
 
 
 def test_index_bucket_modulus_survives_restart(spark, tmp_path):
-    """The band index's on-disk bucket modulus must win over a mismatched
-    index_buckets parameter after a restart: probe prefixes computed with
-    a different modulus would prune away true vs-history matches
-    SILENTLY. _INDEX_META.json records the modulus at first write; a later
-    batch asking for a different value derives the stored one and still
-    flags the cross-batch near-dups."""
+    """The band index's recorded bucket modulus must win over the module
+    constant: probe prefixes computed with a different modulus would prune
+    away true vs-history matches SILENTLY. A state dir whose
+    _INDEX_META.json records modulus 8 (written by another version) is
+    written and probed with 8, still flags the cross-batch near-dups, and
+    keeps its meta unchanged."""
     import json
 
-    from iscc_specs_spark.streaming.ingest import process_dedup_batch
+    from iscc_specs_spark.streaming.ingest import (
+        INDEX_BUCKETS,
+        process_dedup_batch,
+    )
 
+    assert INDEX_BUCKETS != 8, "fixture needs a modulus other than the default"
     state = str(tmp_path / "state_modulus")
+    os.makedirs(state + "/bands")
+    with open(state + "/bands/_INDEX_META.json", "w") as f:
+        json.dump({"index_buckets": 8}, f)
     pages = generate_pages(spark, 40, partitions=2)
     codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
     b0 = codes.where("url like '%/p/0'")
     b1 = codes.where("url not like '%/p/0'")
 
-    process_dedup_batch(b0, 0, state, index_buckets=64)
-    with open(state + "/bands/_INDEX_META.json") as f:
-        assert json.load(f) == {"index_buckets": 64}
-
-    # restart with a DIFFERENT requested modulus: stored layout must win
-    process_dedup_batch(b1, 1, state, index_buckets=8)
+    process_dedup_batch(b0, 0, state)
+    process_dedup_batch(b1, 1, state)
     flags = spark.read.parquet(state + "/dup_flags").collect()
     assert any(r["src"] == "vs_history" for r in flags), (
-        "cross-batch near-dups lost under a mismatched bucket modulus"
+        "cross-batch near-dups lost under the recorded bucket modulus"
     )
+    pfx = {
+        int(d.split("=")[1])
+        for b in (0, 1)
+        for d in os.listdir(f"{state}/bands/ingest_batch={b}")
+        if d.startswith("band_pfx=")
+    }
+    assert pfx and max(pfx) < 8, pfx  # written with the recorded modulus
     with open(state + "/bands/_INDEX_META.json") as f:
-        assert json.load(f) == {"index_buckets": 64}  # unchanged
+        assert json.load(f) == {"index_buckets": 8}  # unchanged
 
 
-def test_legacy_band_index_migrates_on_first_contact(spark, tmp_path):
-    """A pre-band_pfx band index (partitioned by ingest_batch only) must be
-    rewritten to the (ingest_batch, band_pfx) layout the first time a batch
-    touches it — otherwise the batch's own (ingest_batch, band_pfx) write
-    creates mixed partition depths and the NEXT batch's index read fails
-    with 'Conflicting directory structures' (the stream survives exactly
-    one batch). Pins the round-5 advice finding."""
+def test_pre_band_pfx_index_fails_loudly(spark, tmp_path):
+    """A band index partitioned by ingest_batch only (the layout before
+    band_pfx) is not an input format: the next batch must raise before it
+    writes its flags, never drop the vs-history flags silently."""
     import shutil
+
+    import pytest
+    from pyspark.errors import AnalysisException
 
     from iscc_specs_spark.streaming.ingest import process_dedup_batch
 
@@ -553,13 +563,11 @@ def test_legacy_band_index_migrates_on_first_contact(spark, tmp_path):
     pages = generate_pages(spark, 60, partitions=2)
     codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
     b0 = codes.where("url like '%/p/0'")
-    b1 = codes.where("url like '%/p/1'")
-    b2 = codes.where("url not like '%/p/0' and url not like '%/p/1'")
+    b1 = codes.where("url not like '%/p/0'")
 
     process_dedup_batch(b0, 0, state)
-
-    # downgrade bands/ to the legacy layout: drop band_pfx, repartition by
-    # ingest_batch only, no _INDEX_META.json (predates both features)
+    # rewrite bands/ in the old layout: no band_pfx, partitioned by
+    # ingest_batch only, no _INDEX_META.json
     legacy_rows = (
         spark.read.parquet(state + "/bands").drop("band_pfx")
         .localCheckpoint(eager=True)
@@ -570,30 +578,35 @@ def test_legacy_band_index_migrates_on_first_contact(spark, tmp_path):
         .partitionBy("ingest_batch")
         .parquet(state + "/bands")
     )
-    assert not any(
-        d.startswith("band_pfx=")
-        for d in os.listdir(state + "/bands/ingest_batch=0")
-    )
 
-    # first contact migrates; the batch after that is the one that used to
-    # die on the mixed directory structure
-    process_dedup_batch(b1, 1, state)
-    process_dedup_batch(b2, 2, state)
+    with pytest.raises(AnalysisException, match="band_pfx"):
+        process_dedup_batch(b1, 1, state)
+    assert not os.path.exists(state + "/dup_flags/ingest_batch=1")
 
-    bands = spark.read.parquet(state + "/bands")
-    assert "band_pfx" in bands.columns
-    for b in (0, 1, 2):
-        assert any(
-            d.startswith("band_pfx=")
-            for d in os.listdir(f"{state}/bands/ingest_batch={b}")
-        ), f"ingest_batch={b} not in the (ingest_batch, band_pfx) layout"
-    assert not os.path.exists(state + "/bands__migrating")
-    assert not os.path.exists(state + "/bands__legacy")
 
-    # the migrated index still finds cross-batch near-dups (generate_pages
-    # plants near-dup variants across the url space)
+def test_history_batch_builds_rep_codes_once(spark, tmp_path, monkeypatch):
+    """A history batch builds the slim representative table once and
+    shares it between the within-batch pairs and the vs-history probe."""
+    from iscc_specs_spark.operators import lsh
+    from iscc_specs_spark.streaming.ingest import process_dedup_batch
+
+    state = str(tmp_path / "state_slim")
+    pages = generate_pages(spark, 40, partitions=2)
+    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
+    process_dedup_batch(codes.where("url like '%/p/0'"), 0, state)
+
+    calls = []
+    real = lsh.rep_codes
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(lsh, "rep_codes", counting)
+    process_dedup_batch(codes.where("url not like '%/p/0'"), 1, state)
+    assert len(calls) == 1, f"rep_codes built {len(calls)} times"
     flags = spark.read.parquet(state + "/dup_flags")
-    assert flags.where("src = 'vs_history'").count() > 0
+    assert flags.where("src = 'vs_history'").count() > 0  # probe ran
 
 
 def test_curate_state_one_row_per_recrawled_url(spark, tmp_path):
@@ -622,42 +635,3 @@ def test_curate_state_empty_state_is_schema_stable(spark, tmp_path):
     out = curate_state(spark, str(tmp_path / "never_written"))
     assert out.columns == ["url", "cluster_id", "is_canonical"]
     assert out.count() == 0
-
-
-def test_interrupted_migration_swap_finishes_without_rebuild(spark, tmp_path):
-    """Crash window: the staged (complete, meta-marked) copy exists while
-    bands/ was re-created as a meta-only dir by a replay. The migration
-    must FINISH the swap (cheap rename), not delete both copies and leave
-    the backfill path to rebuild the index from scratch; an incomplete
-    staging (no meta marker) must be discarded, never renamed in."""
-    import shutil
-
-    from iscc_specs_spark.streaming.ingest import (
-        _migrate_legacy_band_index,
-        process_dedup_batch,
-    )
-
-    state = str(tmp_path / "state_swap")
-    pages = generate_pages(spark, 30, partitions=2)
-    codes = compute_codes(pages, ("text", "data")).localCheckpoint(eager=True)
-    process_dedup_batch(codes, 0, state)
-    n_rows = spark.read.parquet(state + "/bands").count()
-
-    # simulate: swap built and meta-marked, bands re-created meta-only
-    os.rename(state + "/bands", state + "/bands__migrating")
-    os.makedirs(state + "/bands")
-    shutil.copy(
-        state + "/bands__migrating/_INDEX_META.json",
-        state + "/bands/_INDEX_META.json",
-    )
-    _migrate_legacy_band_index(spark, state, 16)
-    assert not os.path.exists(state + "/bands__migrating")
-    assert spark.read.parquet(state + "/bands").count() == n_rows
-
-    # incomplete staging (no meta marker): discarded, bands untouched
-    os.makedirs(state + "/bands__migrating")
-    with open(state + "/bands__migrating/part-incomplete.parquet", "wb"):
-        pass
-    _migrate_legacy_band_index(spark, state, 16)
-    assert not os.path.exists(state + "/bands__migrating")
-    assert spark.read.parquet(state + "/bands").count() == n_rows
